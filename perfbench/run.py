@@ -2,12 +2,13 @@
 
     python3 perfbench/run.py --workload tpch_point --seed 1 --seconds 20 --trace 0
 
-Run from the repository root. Each run sets the engine up three times and
-reports the median set-up, runs whole passes of the workload until
-``--seconds`` have been measured, checks every result outside the timed
-region, and prints a report followed by one JSON line (the last line of
-stdout). ``--trace 1`` wraps each layer's entry points and prints the
-per-layer metrics instead of the end-to-end ones. See perfbench/README.md.
+Run from the repository root. Each run sets the engine up once, from a
+cold process, runs a fixed number of whole passes of the workload (worked
+out from ``--seconds`` alone, never from elapsed time), checks every result
+outside the timed region, and prints a report followed by one JSON line
+(the last line of stdout). ``--trace 1`` wraps each layer's entry points
+and prints the per-layer metrics instead of the end-to-end ones. See
+perfbench/README.md.
 """
 
 from __future__ import annotations
@@ -32,7 +33,8 @@ from collections import defaultdict  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("tpch_point", "corpus_cdc")
-SETUPS = 3
+# Nominal length of one pass; passes = round(--seconds / this), at least 1.
+NOMINAL_PASS_S = 25.0
 TAIL_BEYOND = 10  # samples that must lie beyond the reported tail
 # The sf0.1 fixture TESTDATA.md names; SPARK_GRAFT_SF_DIR overrides it.
 DEFAULT_SF_DIR = os.path.expanduser("~/testdata/sf0.1")
@@ -146,16 +148,22 @@ class Context:
         self.plan_calls = 0
         self.plan_hits = 0
 
-    def set_up(self) -> float:
+    def set_up(self) -> None:
         from glaredb_spark.session import connect
 
-        t0 = time.perf_counter()
-        if self.sess is not None:
-            self.sess.close()
         self.sess = connect(app_name="perfbench", sf_dir=self.sf_dir,
                             **self.config["spark_conf"])
         self.spark = self.sess.spark
-        return time.perf_counter() - t0
+
+    def oracle(self):
+        """The DuckDB oracle, opened at the first check so that neither
+        its import nor its memory falls inside the measured passes."""
+        if self.duck is None:
+            from checks import DuckOracle
+            from glaredb_spark.session import TPCH_TABLES
+
+            self.duck = DuckOracle(self.sf_dir, TPCH_TABLES)
+        return self.duck
 
     def compare_corpus(self, name: str, pdf) -> "str | None":
         from checks import load_expected
@@ -220,8 +228,9 @@ def import_program(workload: str) -> None:
 
 
 def measure(ctx: Context, rng: random.Random, build_pass):
-    """Whole passes until --seconds have gone by; checks run afterwards,
-    in op order, so the CDC expected state advances as the table did."""
+    """A fixed number of whole passes; the peak memory is read right after
+    them, and the checks run afterwards, in op order, so the CDC expected
+    state advances as the table did."""
     tracer = ctx.tracer
     probe = None
     if tracer is not None:
@@ -234,8 +243,9 @@ def measure(ctx: Context, rng: random.Random, build_pass):
     by_kind: dict[str, dict] = defaultdict(lambda: defaultdict(float))
     heap = 0.0
     steal0 = cpu_times()
+    passes = max(1, round(ctx.args.seconds / NOMINAL_PASS_S))
     t_start = time.perf_counter()
-    while True:
+    for _ in range(passes):
         for op in build_pass(ctx, rng):
             op_id = f"{len(records)}:{op.name}"
             if tracer is not None:
@@ -267,12 +277,11 @@ def measure(ctx: Context, rng: random.Random, build_pass):
                         - lake["state_before_commit"][-1]["table_bytes"])
                 tracer.overhead_s += time.perf_counter() - t1
             records.append([op, seconds, result, error])
-        if time.perf_counter() - t_start >= ctx.args.seconds:
-            break
     measure_s = time.perf_counter() - t_start
-    t_check = time.perf_counter()
     extra = {"lake": lake, "heap_mb": heap, "by_kind": by_kind,
-             "measure_s": measure_s, "steal": cpu_steal_share(steal0)}
+             "passes": passes, "measure_s": measure_s,
+             "steal": cpu_steal_share(steal0), "rss_mb": ctx.peak_rss_mb()}
+    t_check = time.perf_counter()
     if probe is not None:
         extra["gc_s"] = probe.gc_seconds() - gc0
     for rec in records:
@@ -400,35 +409,32 @@ def _run(ctx: Context, args, config: dict, work: str) -> dict:
 
     import workloads as wl
 
-    import_program(args.workload)
-    import_s = time.perf_counter() - PROCESS_START
     if not os.path.exists(os.path.join(args.sf_dir, "orders.parquet")):
         raise SystemExit(f"fixture not found: {args.sf_dir}")
+    # Set-up is one cold start: process start (interpreter, imports) to the
+    # session connected with its tables registered, plus the Iceberg table
+    # load on corpus_cdc. Reading the benchmark's key pools is not in it.
+    import_program(args.workload)
+    import_s = time.perf_counter() - PROCESS_START
+    ctx.set_up()
+    setup_s = time.perf_counter() - PROCESS_START
     t0 = time.perf_counter()
     ctx.inputs = wl.read_inputs(args.sf_dir)
     inputs_s = time.perf_counter() - t0
-    setups = [ctx.set_up() + (import_s if i == 0 else 0.0)
-              for i in range(SETUPS)]
-    setup_s = statistics.median(setups)
     rng = random.Random(args.seed)
     load_s = 0.0
-    t_warm = time.perf_counter()
     if args.workload == "tpch_point":
-        from checks import DuckOracle
-        from glaredb_spark.session import TPCH_TABLES
-
-        ctx.duck = DuckOracle(args.sf_dir, TPCH_TABLES)
-        wl.tpch_point_warmup(ctx)
-        build_pass = wl.tpch_point_pass
+        build_pass, warm_up = wl.tpch_point_pass, wl.tpch_point_warmup
     else:
         ctx.cdc = wl.CdcTable(ctx, os.path.join(work, "iceberg", "orders"))
         t0 = time.perf_counter()
         ctx.cdc.load()
         load_s = time.perf_counter() - t0
         setup_s += load_s
-        wl.corpus_cdc_warmup(ctx)
-        build_pass = wl.corpus_cdc_pass
-    warm_s = time.perf_counter() - t_warm - load_s
+        build_pass, warm_up = wl.corpus_cdc_pass, wl.corpus_cdc_warmup
+    t0 = time.perf_counter()
+    warm_up(ctx)
+    warm_s = time.perf_counter() - t0
     if args.trace:
         from tracing import Tracer
 
@@ -439,7 +445,7 @@ def _run(ctx: Context, args, config: dict, work: str) -> dict:
     finally:
         if ctx.tracer is not None:
             ctx.tracer.restore()
-    jvm_mb, py_mb = ctx.peak_rss_mb()
+    jvm_mb, py_mb = extra["rss_mb"]
 
     lat = [r[1] for r in records]
     failed = [r for r in records if r[3] is not None]
@@ -452,15 +458,17 @@ def _run(ctx: Context, args, config: dict, work: str) -> dict:
           f"driver_mem={config['driver_mem']} (-Xms too) "
           + " ".join(f"{k}={v}" for k, v in config["spark_conf"].items()
                      if "showConsoleProgress" in k))
-    print(f"phases: inputs={inputs_s:.1f}s set-ups={sum(setups):.1f}s "
-          f"warm-up={warm_s:.1f}s measured={extra['measure_s']:.1f}s "
+    print(f"phases: set-up={setup_s:.1f}s inputs={inputs_s:.1f}s "
+          f"warm-up={warm_s:.1f}s passes={extra['passes']} "
+          f"measured={extra['measure_s']:.1f}s "
           f"checks={extra['check_s']:.1f}s "
           f"cpu_steal={100 * extra['steal']:.1f}%")
     for op, _, _, err in failed:
         print(f"FAILED {op.kind}:{op.name}: {err}")
     rows = [
         ("setup_s", setup_s, "s",
-         f"median of {SETUPS} set-ups {[round(s, 3) for s in setups]}"
+         f"cold: imports {import_s:.3f} + connect "
+         f"{setup_s - import_s - load_s:.3f}"
          + (f" + table load {load_s:.3f}" if load_s else "")),
         ("ops_per_s", len(lat) / sum(lat), "ops/s",
          f"{len(lat)} ops at sf_dir={os.path.basename(args.sf_dir)}"),
@@ -470,7 +478,8 @@ def _run(ctx: Context, args, config: dict, work: str) -> dict:
         ("failed_op_ratio", len(failed) / len(lat), "ratio",
          f"{len(failed)}/{len(lat)}"),
         ("peak_rss_mb", jvm_mb + py_mb, "MB",
-         f"driver JVM VmHWM {jvm_mb:.0f} + Python maxrss {py_mb:.0f}"),
+         f"driver JVM VmHWM {jvm_mb:.0f} + Python maxrss {py_mb:.0f}, "
+         "read before the checks"),
     ]
     by_kind: dict[str, list[float]] = defaultdict(list)
     for op, seconds, _, _ in records:
