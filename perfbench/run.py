@@ -97,7 +97,12 @@ def tail(values: list[float]) -> tuple[float, float, int]:
 def pin_environment(work: str) -> dict:
     """Pin the engine configuration and keep every file the run writes
     under ``work``. Must run before pyspark starts the JVM."""
-    cpus = len(os.sched_getaffinity(0))
+    # One core fewer than the process may use: the JVM's GC, JIT and
+    # scheduler threads, the Python client and the OS then rarely preempt a
+    # task thread. With every core running a task, a stage waited for any
+    # task whose core the hypervisor took away, and on a shared host that
+    # about tripled the run-to-run spread.
+    cpus = max(1, len(os.sched_getaffinity(0)) - 1)
     with open("/proc/meminfo") as fh:
         mem_kb = int(fh.readline().split()[1])
     # A fixed heap (-Xms = -Xmx) takes G1's heap-growth timing out of
