@@ -496,6 +496,17 @@ DEFAULT_CONF = {
 }
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 48g: local mode runs every task
+    in the driver JVM, and a heap larger than the machine can back ends
+    in the kernel's OOM killer rather than in a Spark spill."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1, min(48, ram // 2**30 // 2))}g"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "glaredb_spark",
@@ -513,7 +524,9 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
     )
     for k, v in DEFAULT_CONF.items():
         builder = builder.config(k, v)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
+from glaredb_spark.sources.files import scan_file_keys
 from glaredb_spark.sources.footer_stats import (
     range_excludes as _range_excludes,
 )
@@ -568,19 +569,19 @@ def _to_physical(df: DataFrame, state: "DeltaState") -> DataFrame:
     return df.select(*cols)
 
 
-def _dv_positions_frame(spark, table_path: str, dv_adds: dict, resolve):
+def _dv_positions_frame(spark, table_path: str, dv_adds: dict, keys: dict):
     """(``_dv_path``, ``_dv_pos``) frame of every vectored position —
-    built in bulk from the decoded numpy arrays via pandas/Arrow (no
-    per-row Python tuples: DV cardinality is the deleted-row count and
-    can be large)."""
+    ``_dv_path`` is the file's ``_metadata.file_path`` string (``keys``:
+    add path -> key, see ``scan_file_keys``). Built in bulk from the
+    decoded numpy arrays via pandas/Arrow (no per-row Python tuples: DV
+    cardinality is the deleted-row count and can be large)."""
     import numpy as np
     import pandas as pd
 
     paths, poss = [], []
     for p, dv in dv_adds.items():
-        resolved = "/" + os.path.abspath(resolve(p)).lstrip("/")
         arr = np.asarray(_dv_positions(table_path, dv), dtype=np.int64)
-        paths.append(np.full(len(arr), resolved, dtype=object))
+        paths.append(np.full(len(arr), keys[p], dtype=object))
         poss.append(arr)
     pdf = pd.DataFrame(
         {
@@ -881,16 +882,18 @@ def read_delta_native(
         if a.get("deletionVector") and p in state.adds
     }
     out_cols = [f.name for f in schema.fields]
+    keys: dict = {}  # add path -> its _metadata.file_path string
 
-    def _scan(files):
+    def _scan(adds):
+        files = [_resolve(p) for p in adds]
         df = spark.read.schema(data_schema).parquet(*files)
         if dv_adds:
+            by_file = scan_file_keys(df, files, RuntimeError)
+            keys.update((p, by_file[f]) for p, f in zip(adds, files))
             # _metadata must be captured at the scan itself, before any
             # projection hides it
-            from glaredb_spark.sources.files import decoded_file_path
-
             df = df.withColumn(
-                "_dv_path", decoded_file_path()
+                "_dv_path", F.col("_metadata.file_path")
             ).withColumn("_dv_pos", F.col("_metadata.row_index"))
         if phys:
             keep = [
@@ -903,7 +906,7 @@ def read_delta_native(
         return df
 
     if not part_cols:
-        pieces = [_scan([_resolve(p) for p in state.adds])]
+        pieces = [_scan(list(state.adds))]
     else:
         # group files by partition tuple; attach literals per group.
         # Group count = live partition count — the same driver-side
@@ -911,11 +914,11 @@ def read_delta_native(
         by_part: dict[tuple, list[str]] = {}
         for p, pv in state.adds.items():
             key = tuple(pv.get(phys.get(c, c)) for c in part_cols)
-            by_part.setdefault(key, []).append(_resolve(p))
+            by_part.setdefault(key, []).append(p)
         types = {f.name: f.dataType for f in schema.fields}
         pieces = []
-        for key, files in sorted(by_part.items(), key=_part_sort_key):
-            df = _scan(files)
+        for key, adds in sorted(by_part.items(), key=_part_sort_key):
+            df = _scan(adds)
             for c, raw in zip(part_cols, key):
                 df = df.withColumn(c, _cast_partition_lit(raw, types[c]))
             pieces.append(df)
@@ -923,7 +926,7 @@ def read_delta_native(
     for df in pieces[1:]:
         out = out.unionByName(df)
     if dv_adds:
-        dels = _dv_positions_frame(spark, path, dv_adds, _resolve)
+        dels = _dv_positions_frame(spark, path, dv_adds, keys)
         # no explicit broadcast: DV cardinality is unbounded (it is the
         # deleted-row count) — AQE broadcasts when it is actually small
         out = out.join(dels, ["_dv_path", "_dv_pos"], "left_anti")
@@ -1548,9 +1551,9 @@ def delete_delta_native(
 
 def _scan_live_with_positions(spark, path: str, state: "DeltaState"):
     """DataFrame of the table's LIVE rows (existing DVs applied) with
-    ``_dv_path``/``_dv_pos`` helper columns, plus the resolved-path ->
-    relative-add-path mapping — the shared probe for every DV-writing
-    operation."""
+    ``_dv_path``/``_dv_pos`` helper columns, plus the ``_dv_path`` key
+    (the file's ``_metadata.file_path`` string) -> relative-add-path
+    mapping — the shared probe for every DV-writing operation."""
     schema = StructType.fromJson(json.loads(state.schema_json))
     part_cols = state.partition_columns
     data_fields = [f for f in schema.fields if f.name not in part_cols]
@@ -1564,16 +1567,15 @@ def _scan_live_with_positions(spark, path: str, state: "DeltaState"):
     def _resolve(p: str) -> str:
         return os.path.join(path, urllib.parse.unquote(p))
 
-    rel_of = {
-        "/" + os.path.abspath(_resolve(p)).lstrip("/"): p
-        for p in state.adds
-    }
+    keys: dict = {}  # add path -> its _metadata.file_path string
 
-    def _with_pos(df):
-        from glaredb_spark.sources.files import decoded_file_path
-
+    def _with_pos(adds):
+        files = [_resolve(p) for p in adds]
+        df = spark.read.schema(scan_schema).parquet(*files)
+        by_file = scan_file_keys(df, files, RuntimeError)
+        keys.update((p, by_file[f]) for p, f in zip(adds, files))
         df = df.withColumn(
-            "_dv_path", decoded_file_path()
+            "_dv_path", F.col("_metadata.file_path")
         ).withColumn("_dv_pos", F.col("_metadata.row_index"))
         if phys:  # logical names for the caller's predicate
             df = df.select(
@@ -1587,19 +1589,15 @@ def _scan_live_with_positions(spark, path: str, state: "DeltaState"):
         return df
 
     if not part_cols:
-        scanned = _with_pos(
-            spark.read.schema(scan_schema).parquet(
-                *[_resolve(p) for p in state.adds]
-            )
-        )
+        scanned = _with_pos(list(state.adds))
     else:
         by_part: dict[tuple, list[str]] = {}
         for p, pv in state.adds.items():
             key = tuple(pv.get(phys.get(c, c)) for c in part_cols)
-            by_part.setdefault(key, []).append(_resolve(p))
+            by_part.setdefault(key, []).append(p)
         pieces = []
-        for key, files in sorted(by_part.items(), key=_part_sort_key):
-            df = _with_pos(spark.read.schema(scan_schema).parquet(*files))
+        for key, adds in sorted(by_part.items(), key=_part_sort_key):
+            df = _with_pos(adds)
             for c, raw in zip(part_cols, key):
                 df = df.withColumn(c, _cast_partition_lit(raw, types[c]))
             pieces.append(df)
@@ -1613,23 +1611,24 @@ def _scan_live_with_positions(spark, path: str, state: "DeltaState"):
     }
     if dv_old:
         scanned = scanned.join(
-            _dv_positions_frame(spark, path, dv_old, _resolve),
+            _dv_positions_frame(spark, path, dv_old, keys),
             ["_dv_path", "_dv_pos"],
             "left_anti",
         )
-    return scanned, rel_of
+    return scanned, {k: p for p, k in keys.items()}
 
 
-def _write_dvs_distributed(spark, path: str, state: "DeltaState", matched):
+def _write_dvs_distributed(
+    spark, path: str, state: "DeltaState", matched, rel_of: dict
+):
     """Encode+write one roaring .bin per touched file EXECUTOR-SIDE
     (cogrouped applyInPandas; existing DV blobs ride the right side for
     the position union). ``matched`` is a (f, pos) frame of LIVE row
-    positions. Returns one collected Row per touched file — the only
-    driver-side product (metadata-scale)."""
+    positions, ``f`` keyed as in ``rel_of`` (``_dv_path`` key ->
+    relative add path, from ``_scan_live_with_positions``). Returns one
+    collected Row per touched file — the only driver-side product
+    (metadata-scale)."""
     import pandas as pd
-
-    def _resolve(p: str) -> str:
-        return os.path.join(path, urllib.parse.unquote(p))
 
     from glaredb_spark.sources.roaring import encode_portable64
 
@@ -1638,11 +1637,9 @@ def _write_dvs_distributed(spark, path: str, state: "DeltaState", matched):
         for p, a in state.add_meta.items()
         if a.get("deletionVector") and p in state.adds
     }
+    key_of = {p: k for k, p in rel_of.items()}
     blob_rows = [
-        (
-            "/" + os.path.abspath(_resolve(p)).lstrip("/"),
-            encode_portable64(_dv_positions(path, dv)).hex(),
-        )
+        (key_of[p], encode_portable64(_dv_positions(path, dv)).hex())
         for p, dv in dv_old.items()
     ]
     blobs = spark.createDataFrame(
@@ -1782,7 +1779,7 @@ def _delete_with_dvs(
     matched = matched_rows.select(
         F.col("_dv_path").alias("f"), F.col("_dv_pos").alias("pos")
     )
-    results = _write_dvs_distributed(spark, path, state, matched)
+    results = _write_dvs_distributed(spark, path, state, matched, rel_of)
     if not results:
         if cdf_on:
             matched_rows.unpersist()
@@ -1845,7 +1842,9 @@ def _update_with_dvs(
         positions = matched.select(
             F.col("_dv_path").alias("f"), F.col("_dv_pos").alias("pos")
         )
-        results = _write_dvs_distributed(spark, path, state, positions)
+        results = _write_dvs_distributed(
+            spark, path, state, positions, rel_of
+        )
         if not results:
             return (0, 0)
         updated_cols = []

@@ -747,18 +747,52 @@ def load_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def decoded_file_path(col=None):
-    """``_metadata.file_path`` as a real filesystem path (a Column).
+    """``_metadata.file_path`` as a real filesystem path (a Column) —
+    the user-visible ``_filename`` value.
 
     Spark reports the scan path URI-encoded (space→%20, %→%25, #→%23)
     while ``+`` stays literal; java's URLDecoder would turn that ``+``
-    into a space, so pre-escape it before ``url_decode``. Join keys
-    built from ``os.path.abspath`` on the driver then match
-    byte-for-byte. (ADVICE r5: partition directories with
-    URI-escapable characters otherwise silently drop deletion-vector /
-    delete-file matches, resurrecting deleted rows.)"""
+    into a space, so pre-escape it before ``url_decode``. Joins that
+    match rows to their file use ``scan_file_keys`` instead: it
+    decodes once per file, not once per row."""
     c = col if col is not None else F.col("_metadata.file_path")
     p = F.regexp_replace(c, "^file:/*", "/")
     return F.url_decode(F.regexp_replace(p, r"\+", "%2B"))
+
+
+def scan_file_keys(df: DataFrame, paths, error=ValueError) -> dict:
+    """{path: the exact string Spark reports in ``_metadata.file_path``
+    for it} over the local files ``paths`` that the file scan ``df``
+    reads — computed on the driver once per file, so a per-file join
+    matches the raw column instead of decoding every row.
+
+    ``inputFiles()`` lists the files URI-encoded with an empty authority
+    (``file:///a/b%20c``); ``_metadata.file_path`` holds the same
+    encoding in Hadoop's ``file:/a/b%20c`` form, and unquoting it gives
+    back the local path (``+`` stays literal in both). A path the scan
+    does not list raises ``error``: its rows would miss every per-file
+    match, and a missed delete-file match resurrects deleted rows."""
+    from urllib.parse import unquote
+
+    by_local = {}
+    for uri in df.inputFiles():
+        rest = uri[len("file:"):] if uri.startswith("file:") else None
+        if rest is None:
+            by_local[uri] = uri
+            continue
+        if rest.startswith("//"):
+            rest = rest[2:]
+        by_local[unquote(rest)] = "file:" + rest
+    keys = {}
+    for p in paths:
+        key = by_local.get(os.path.abspath(p))
+        if key is None:
+            raise error(
+                f"scan of {p!r} lists no such file; cannot match its rows "
+                "to the file's metadata"
+            )
+        keys[p] = key
+    return keys
 
 
 def with_filename(

@@ -407,6 +407,50 @@ def _is_widening(frm: str, to: str) -> bool:
     )
 
 
+def _declared_schema(meta: dict):
+    """The current schema's declared types as the scan schema when every
+    column is a faithfully-mappable primitive, else None. Scanning with
+    it reads no footer at plan time: no inference job, no mergeSchema
+    sweep over every file, no field-id strip and re-read — files written
+    before an ADD COLUMN null-fill it and narrower files upcast under a
+    widened type. Complex columns (struct/list/map/uuid) return None and
+    keep the inference paths for shape fidelity. Types map in Python:
+    parsing each column's DDL in the JVM cost a round trip per column
+    on every read."""
+    from pyspark.sql import types as T
+
+    simple = {
+        "boolean": T.BooleanType(), "int": T.IntegerType(),
+        "long": T.LongType(), "float": T.FloatType(),
+        "double": T.DoubleType(), "date": T.DateType(),
+        "string": T.StringType(), "binary": T.BinaryType(),
+        "timestamp_ntz": T.TimestampNTZType(),
+        "timestamp": T.TimestampType(),
+    }
+    fields = []
+    for f in _current_schema_obj(meta).get("fields", []):
+        ddl = _declared_primitive_ddl(f["type"]) or ""
+        m = re.fullmatch(r"decimal\((\d+),(\d+)\)", ddl)
+        dt = (T.DecimalType(int(m.group(1)), int(m.group(2))) if m
+              else simple.get(ddl))
+        if dt is None:
+            return None
+        fields.append(T.StructField(f["name"], dt))
+    return T.StructType(fields) if fields else None
+
+
+def _read_schema(spark, meta: dict, paths: list):
+    """Explicit scan schema for the table's data files: the declared
+    schema when it is all primitives, the merged schema of an evolved
+    table (>1 schemas) otherwise, else None (infer from the files)."""
+    declared = _declared_schema(meta)
+    if declared is not None:
+        return declared
+    if len(meta.get("schemas") or []) > 1:
+        return _evolved_read_schema(spark, meta, paths)
+    return None
+
+
 def _evolved_read_schema(spark, meta: dict, paths: list):
     """Explicit scan schema for a schema-evolved table (>1 schemas):
     mergeSchema-inferred types for every column ANY file carries —
@@ -415,7 +459,9 @@ def _evolved_read_schema(spark, meta: dict, paths: list):
     them and broke externally-evolved tables — r9 review) — plus
     synthesized nullable fields for current-schema columns no file
     carries yet (a just-added column). Dropped columns are simply not
-    selected. Field-id metadata is stripped (mixed-era files).
+    selected. Field-id metadata is stripped (mixed-era files). Only a
+    schema with a complex column gets here (``_read_schema``): an
+    all-primitive one scans with ``_declared_schema``.
 
     Type widening (r10): a column whose DECLARED type is a spec
     promotion of the inferred physical type scans under the declared
@@ -427,22 +473,6 @@ def _evolved_read_schema(spark, meta: dict, paths: list):
     from pyspark.sql.types import _parse_datatype_string
 
     cur = _current_schema_obj(meta).get("fields", [])
-    # fast path (r10): a schema of faithfully-mappable primitives needs
-    # NO inference at all — the declared types ARE the scan schema
-    # (old files null-fill added columns, narrower files upcast under a
-    # widened type). This keeps evolved-table reads zero-I/O at plan
-    # time: the mergeSchema sweep below reads every file's footer per
-    # read, O(#files) planning a 100k-file table must not pay for one
-    # historical ADD COLUMN. Complex columns (struct/list/map/uuid)
-    # keep the inference path for shape fidelity.
-    fast = [
-        (_declared_primitive_ddl(f["type"]), f["name"]) for f in cur
-    ]
-    if all(d is not None for d, _n in fast):
-        return StructType([
-            StructField(n, _parse_datatype_string(d), True)
-            for d, n in fast
-        ])
     try:
         merged, _ = _strip_schema_field_ids(
             spark.read.option("mergeSchema", "true").parquet(*paths).schema
@@ -896,15 +926,19 @@ def read_iceberg_native(
     spec module parses delete manifests but whose scan is v1-only):
     position deletes apply as an exact anti-join on
     (data file, ``_metadata.row_index``) — the delete files' stored
-    data-file URIs are translated to scan paths through a
-    broadcast-sized mapping frame (one row per data file), never a UDF —
-    and equality deletes apply as null-safe anti-joins on their equality
-    columns (resolved from ``equality_ids`` against the current schema,
-    falling back to the delete file's own columns), scoped per spec to
-    data files with STRICTLY OLDER sequence numbers — a row re-inserted
-    after the delete survives. At scale each anti-join shuffles on the
-    delete keys — the exchange MoR semantics require — with the
-    typically-small delete side broadcast under AQE.
+    data-file URIs are translated to the scan's raw
+    ``_metadata.file_path`` through a broadcast mapping frame (one row
+    per data file), never a UDF or a per-row decode — and equality
+    deletes apply as null-safe anti-joins on their equality columns
+    (resolved from ``equality_ids`` against the current schema, falling
+    back to the delete file's own columns), scoped per spec to data
+    files with STRICTLY OLDER sequence numbers — a row re-inserted after
+    the delete survives. An equality delete side whose manifest record
+    counts fit ``spark.sql.autoBroadcastJoinThreshold`` is broadcast in
+    the initial plan, so the data rows are never shuffled; a larger one
+    shuffles both sides on the delete keys (see ``_mor_apply``). A
+    table whose columns are all primitives scans with its declared
+    schema: building the read touches no parquet footer.
 
     ``partition_filter`` ({source column -> literal}) prunes data FILES
     by their manifest partition tuples BEFORE any scan — including
@@ -945,7 +979,7 @@ def read_iceberg_native(
     active: list[tuple[str, str, int, "str | None"]] = []
     asnaps: list = []  # per-active-file adding snapshot id (rename reads)
     pos_deletes: list[str] = []
-    eq_deletes: list[tuple[str, list[int] | None, int, "str | None"]] = []
+    eq_deletes: list = []  # _mor_apply's (path, ids, seq, scope, rows)
     entries = _manifest_entries(m, table_path, snapshot_id)
     for e in entries:
         df = e["data_file"]
@@ -977,7 +1011,8 @@ def read_iceberg_native(
         elif content == 1:
             pos_deletes.append(resolved)
         elif content == 2:
-            eq_deletes.append((resolved, df.get("equality_ids"), seq, scope))
+            eq_deletes.append((resolved, df.get("equality_ids"), seq,
+                               scope, df.get("record_count")))
         else:
             raise IcebergError(f"unknown iceberg data file content: {content}")
     if not active:
@@ -994,17 +1029,11 @@ def read_iceberg_native(
                 "this state)"
             )
         return _scan_with_field_ids(spark, m, apaths, snapshot_ids=asnaps)
-    # schema-evolved tables (>1 schema) scan with an explicit schema so
-    # pre-evolution files null-fill added columns
-    evolved = (
-        _evolved_read_schema(spark, m, apaths)
-        if len(m.get("schemas") or []) > 1
-        else None
-    )
+    schema = _read_schema(spark, m, apaths)
     if not pos_deletes and not eq_deletes:
-        return _scan_parquet(spark, *apaths, schema=evolved)
+        return _scan_parquet(spark, *apaths, schema=schema)
     return _mor_apply(
-        spark, m, active, pos_deletes, eq_deletes, schema=evolved
+        spark, m, active, pos_deletes, eq_deletes, schema=schema
     )
 
 
@@ -1013,74 +1042,76 @@ def _mor_apply(
     m: dict,
     active: "list[tuple[str, str, int, str | None]]",
     pos_deletes: list[str],
-    eq_deletes: "list[tuple[str, list[int] | None, int, str | None]]",
-    schema: "str | None" = None,
+    eq_deletes: list,
+    schema=None,
 ):
     """Apply position + equality deletes to the given data files and
     return the live rows (shared by the MoR scan and REORG PURGE).
 
     ``active`` rows are (stored path, resolved path, data sequence
-    number, partition-scope key). Position deletes anti-join on
-    (file, row ordinal). Equality deletes apply as ONE null-safe
-    anti-join per distinct equality-id set — NOT per delete file: all
-    files sharing a key-column set are unioned into a single delete
-    frame whose per-file sequence number and partition scope ride a
-    broadcast map join, and the sequence / partition conditions fold
-    into the anti-join condition itself. A streaming-upsert table with
-    N micro-batch delete files therefore plans O(1) joins, not O(N) —
-    the r8 per-file loop grew the plan linearly with batch count
-    (VERDICT r8 "What's wrong #2")."""
+    number, partition-scope key); ``eq_deletes`` rows are (resolved
+    path, equality ids, sequence number, partition-scope key, manifest
+    record count or None). Rows match their file on
+    ``_metadata.file_path`` itself: the exact string Spark reports for
+    each data and delete file is computed once per file on the driver
+    (``scan_file_keys``), never decoded per row, and a file without one
+    raises. Position deletes anti-join on (file, row ordinal).
+    Equality deletes apply as ONE null-safe anti-join per distinct
+    equality-id set — NOT per delete file: all files sharing a
+    key-column set are unioned into a single delete frame whose
+    per-file sequence number and partition scope ride a broadcast map
+    join, and the sequence / partition conditions fold into the
+    anti-join condition itself. A streaming-upsert table with N
+    micro-batch delete files therefore plans O(1) joins, not O(N).
+
+    An equality anti-join's delete side is broadcast in the initial
+    plan when its manifest record counts, times Spark's own per-row
+    size estimate, fit ``spark.sql.autoBroadcastJoinThreshold``: the
+    data rows then stream through a broadcast hash join and are never
+    shuffled. A larger or uncounted delete side keeps the shuffle join
+    (which AQE may still convert once it has run)."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
-    out = _scan_parquet(
-        spark, *[p for _s, p, _q, _pt in active], schema=schema
-    )
+    from glaredb_spark.sources.files import scan_file_keys
+
+    paths = [p for _s, p, _q, _pt in active]
+    out = _scan_parquet(spark, *paths, schema=schema)
     data_cols = out.columns
-    # normalized absolute path of the scanned file ("file:///a/b" and
-    # "file:/a/b" both -> "/a/b"), matched against the manifests'
-    # resolved paths below; the per-file data sequence number and
-    # partition-scope key ride a broadcast map join (one row per file)
-    from glaredb_spark.sources.files import decoded_file_path
-
+    keys = scan_file_keys(out, paths, IcebergError)
     out = out.withColumn(
-        "_ice_path", decoded_file_path()
+        "_ice_path", F.col("_metadata.file_path")
     ).withColumn("_ice_pos", F.col("_metadata.row_index"))
-    # global scope rides as "" (not NULL): after the left join, a NULL
-    # _ice_part can ONLY mean the path lookup missed, which the scope
-    # condition below treats conservatively (apply the delete) — same
-    # bias as the coalesce on _ice_seq (r9 review)
-    seq_map = spark.createDataFrame(
-        [
-            ("/" + os.path.abspath(p).lstrip("/"), q, pt or "")
-            for _s, p, q, pt in active
-        ],
-        "_ice_path string, _ice_seq long, _ice_part string",
-    )
-    out = out.join(F.broadcast(seq_map), "_ice_path", "left")
     if pos_deletes:
-        # stored-URI -> scan-path mapping: one row per data file,
-        # broadcast into the delete join
-        mapping = spark.createDataFrame(
-            [
-                (s, "/" + os.path.abspath(p).lstrip("/"))
-                for s, p, _q, _pt in active
-            ],
-            "stored string, resolved string",
+        # stored-URI -> scan key: one row per data file, broadcast into
+        # the delete join
+        mapping = _file_map(
+            spark, stored=[s for s, _p, _q, _pt in active],
+            _ice_path=[keys[p] for _s, p, _q, _pt in active],
         )
         dels = (
-            _scan_parquet(spark, *pos_deletes)
-            .select(
-                F.col("file_path").alias("stored"),
-                F.col("pos").cast("long").alias("_ice_pos"),
-            )
+            spark.read.schema(_POS_DELETE_SCHEMA).parquet(*pos_deletes)
+            .select(F.col("file_path").alias("stored"),
+                    F.col("pos").alias("_ice_pos"))
             .join(F.broadcast(mapping), "stored")
-            .select(F.col("resolved").alias("_ice_path"), "_ice_pos")
+            .select("_ice_path", "_ice_pos")
         )
         out = out.join(dels, ["_ice_path", "_ice_pos"], "left_anti")
     if eq_deletes:
+        # per-file data sequence number and partition scope (one row per
+        # file). Global scope rides as "" (not NULL): after the left join, a
+        # NULL _ice_part can ONLY mean the key lookup missed, which the
+        # scope condition below treats conservatively (apply the delete) —
+        # same bias as the coalesce on _ice_seq
+        seq_map = _file_map(
+            spark, _ice_path=[keys[p] for _s, p, _q, _pt in active],
+            _ice_seq=[q for _s, _p, q, _pt in active],
+            _ice_part=[pt or "" for _s, _p, _q, pt in active],
+        )
+        out = out.join(F.broadcast(seq_map), "_ice_path", "left")
         field_names = _schema_field_names(m)
         groups: dict[tuple, list] = {}
-        for path, eq_ids, dseq, scope in eq_deletes:
+        for path, eq_ids, dseq, scope, rows in eq_deletes:
             if eq_ids:
                 cols = tuple(
                     field_names[i] for i in eq_ids if i in field_names
@@ -1096,26 +1127,37 @@ def _mor_apply(
                     f"equality delete file {path!r} shares no columns "
                     "with the table schema"
                 )
-            groups.setdefault(cols, []).append((path, dseq, scope))
+            groups.setdefault(cols, []).append((path, dseq, scope, rows))
+        threshold = (
+            spark._jsparkSession.sessionState().conf()
+            .autoBroadcastJoinThreshold()
+        )
         for cols, files in groups.items():
+            dpaths = [p for p, _q, _pt, _n in files]
+            del_df = _scan_parquet(
+                spark, *dpaths, merge_schema=True,
+                schema=(
+                    StructType([schema[c] for c in cols])
+                    if isinstance(schema, StructType) else None
+                ),
+            )
+            dkeys = scan_file_keys(del_df, dpaths, IcebergError)
+            fmap = _file_map(
+                spark, _del_path=[dkeys[p] for p, _q, _pt, _n in files],
+                _del_seq=[q for _p, q, _pt, _n in files],
+                _del_part=[pt or "" for _p, _q, pt, _n in files],
+            )
             del_df = (
-                _scan_parquet(
-                    spark, *[p for p, _q, _pt in files],
-                    merge_schema=True,
-                )
-                .withColumn("_del_path", decoded_file_path())
-                .select(*cols, "_del_path")
+                del_df.select(*cols, F.col("_metadata.file_path")
+                              .alias("_del_path"))
+                .join(F.broadcast(fmap), "_del_path")
+                .drop("_del_path")
             )
-            fmap = spark.createDataFrame(
-                [
-                    ("/" + os.path.abspath(p).lstrip("/"), q, pt or "")
-                    for p, q, pt in files
-                ],
-                "_del_path string, _del_seq long, _del_part string",
-            )
-            del_df = del_df.join(
-                F.broadcast(fmap), "_del_path"
-            ).drop("_del_path")
+            counts = [n for _p, _q, _pt, n in files]
+            if None not in counts and sum(counts) * (
+                8 + del_df._jdf.schema().defaultSize()
+            ) <= threshold:
+                del_df = F.broadcast(del_df)
             cond = None
             for c in cols:
                 term = out[c].eqNullSafe(del_df[c])
@@ -1131,7 +1173,7 @@ def _mor_apply(
             # spec: a delete file under a partitioned spec applies only
             # to data files with the same partition tuple; "" scope =
             # global (unpartitioned spec). A NULL _ice_part means the
-            # seq_map path lookup missed — apply the delete (biased
+            # seq_map key lookup missed — apply the delete (biased
             # against resurrecting deleted rows, like the seq coalesce)
             cond = cond & (
                 (del_df["_del_part"] == F.lit(""))
@@ -1140,6 +1182,21 @@ def _mor_apply(
             )
             out = out.join(del_df, cond, "left_anti")
     return out.select(*data_cols)
+
+
+# the spec's position-delete columns (an optional ``row`` is not read)
+_POS_DELETE_SCHEMA = "file_path string, pos long"
+
+
+def _file_map(spark, **columns):
+    """A frame of driver-held per-file rows (``column=[values]``) as a
+    LocalRelation, built through Arrow. ``createDataFrame`` over a list
+    of tuples builds a Python RDD instead, and broadcasting that ran a
+    Python worker: a 200k-row join took 0.45 s against 0.19 s with the
+    same three-column map as a LocalRelation."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns))
 
 
 _PRIMITIVES = {
@@ -2749,6 +2806,8 @@ def _rewrite_matching_ice(spark, table_path, predicate, operation, rewrite,
     not table size. Returns (matched_rows, files_rewritten)."""
     from pyspark.sql import functions as F
 
+    from glaredb_spark.sources.files import scan_file_keys
+
     table_path = os.path.abspath(table_path)
     # base_meta/commit_fn (r12): a catalog-attached table plans against
     # the CATALOG's current metadata and routes the pointer swap back
@@ -2783,13 +2842,11 @@ def _rewrite_matching_ice(spark, table_path, predicate, operation, rewrite,
     # evolved tables scan with an explicit schema: inference from one
     # pre-evolution file would silently DROP an added column from the
     # rewrite (r9 review)
-    evolved = (
-        _evolved_read_schema(spark, meta, paths)
-        if len(meta.get("schemas") or []) > 1
-        else None
-    )
+    evolved = _read_schema(spark, meta, paths)
+    scan = _scan_parquet(spark, *paths, schema=evolved)
+    keys = scan_file_keys(scan, paths, IcebergError)
     probe = (
-        _scan_parquet(spark, *paths, schema=evolved)
+        scan
         .select(
             F.col("_metadata.file_path").alias("_f"),
             F.expr(predicate).alias("_m"),
@@ -2801,17 +2858,10 @@ def _rewrite_matching_ice(spark, table_path, predicate, operation, rewrite,
     )
     if not probe:
         return (0, 0)
-    import urllib.parse
-
-    def _norm(uri: str) -> str:
-        return os.path.realpath(
-            urllib.parse.unquote(urllib.parse.urlparse(uri).path)
-        )
-
-    touched = {_norm(r["_f"]) for r in probe}
+    touched = {r["_f"] for r in probe}
     matched = sum(r["hits"] for r in probe)
-    keep = [d for d in active if os.path.realpath(d["file_path"]) not in touched]
-    hit = [d for d in active if os.path.realpath(d["file_path"]) in touched]
+    keep = [d for d in active if keys[d["file_path"]] not in touched]
+    hit = [d for d in active if keys[d["file_path"]] in touched]
     src = _scan_parquet(
         spark, *[d["file_path"] for d in hit], schema=evolved
     )
@@ -3056,7 +3106,7 @@ def purge_iceberg_native(spark, table_path: str,
     meta = base_meta if base_meta is not None else table_metadata(table_path)
     active: list[dict] = []
     pos_deletes: list[str] = []
-    eq_deletes: "list[tuple[str, list[int] | None, int, str | None]]" = []
+    eq_deletes: list = []  # _mor_apply's (path, ids, seq, scope, rows)
     entries = _manifest_entries(meta, table_path)
     if _table_needs_id_resolution(meta, entries):
         # materializing deletes through a name-based scan would rewrite
@@ -3088,7 +3138,7 @@ def purge_iceberg_native(spark, table_path: str,
         elif content == 2:
             eq_deletes.append(
                 (resolved, d.get("equality_ids"), int(e.get("_seq", 0)),
-                 scope)
+                 scope, d.get("record_count"))
             )
         else:
             raise IcebergError(
@@ -3101,7 +3151,8 @@ def purge_iceberg_native(spark, table_path: str,
     if pos_deletes:
         referenced = {
             r["file_path"]
-            for r in _scan_parquet(spark, *pos_deletes)
+            for r in spark.read.schema(_POS_DELETE_SCHEMA)
+            .parquet(*pos_deletes)
             .select("file_path")
             .distinct()
             .collect()  # one row per touched file — metadata-scale
@@ -3109,7 +3160,7 @@ def purge_iceberg_native(spark, table_path: str,
 
     def _eq_touches(d: dict) -> bool:
         fseq = int(d.get("_seq") or 0)
-        for _p, _ids, dseq, dscope in eq_deletes:
+        for _p, _ids, dseq, dscope, _n in eq_deletes:
             if dseq > 0 and not fseq < dseq:
                 continue
             if dscope is not None and dscope != d["_scope"]:
@@ -3137,12 +3188,8 @@ def purge_iceberg_native(spark, table_path: str,
                 for d in touched
             ],
             pos_deletes, eq_deletes,
-            schema=(
-                _evolved_read_schema(
-                    spark, meta, [d["_resolved"] for d in touched]
-                )
-                if len(meta.get("schemas") or []) > 1
-                else None
+            schema=_read_schema(
+                spark, meta, [d["_resolved"] for d in touched]
             ),
         )
         from pyspark.sql import Observation
@@ -4500,12 +4547,9 @@ def optimize_iceberg_native(
             snapshot_ids=[d.get("_snapshot_id") for d in rewrite],
         )
     else:
-        evolved = (
-            _evolved_read_schema(spark, meta, paths)
-            if len(meta.get("schemas") or []) > 1
-            else None
+        df = _scan_parquet(
+            spark, *paths, schema=_read_schema(spark, meta, paths)
         )
-        df = _scan_parquet(spark, *paths, schema=evolved)
     if zorder_by:
         unknown = [c for c in zorder_by if c not in df.columns]
         if unknown:
@@ -4639,11 +4683,8 @@ def merge_iceberg_native(
             "until OPTIMIZE physically normalizes the files"
         )
     evolved = (
-        _evolved_read_schema(
-            spark, meta, [d["file_path"] for d in active]
-        )
-        if active and len(meta.get("schemas") or []) > 1
-        else None
+        _read_schema(spark, meta, [d["file_path"] for d in active])
+        if active else None
     )
     src = source.persist()
     try:
@@ -4657,14 +4698,14 @@ def merge_iceberg_native(
         # A matched-DELETE clause (r14) also needs the probe: deleted
         # rows live in matched files that must rewrite without them.
         if active and (when_matched_update or when_matched_delete):
-            from glaredb_spark.sources.files import decoded_file_path
+            from glaredb_spark.sources.files import scan_file_keys
 
-            target = _scan_parquet(
-                spark, *[d["file_path"] for d in active],
-                schema=evolved,
-            ).withColumn("_f", decoded_file_path())
+            paths = [d["file_path"] for d in active]
+            target = _scan_parquet(spark, *paths, schema=evolved)
+            keys = scan_file_keys(target, paths, IcebergError)
             probe = (
-                target.join(src, on, "left_semi")
+                target.withColumn("_f", F.col("_metadata.file_path"))
+                .join(src, on, "left_semi")
                 .groupBy("_f")
                 .agg(F.count(F.lit(1)).alias("hits"))
                 .collect()
@@ -4672,9 +4713,7 @@ def merge_iceberg_native(
             updated = sum(r["hits"] for r in probe)
             hit_paths = {r["_f"] for r in probe}
             touched = [
-                d for d in active
-                if "/" + os.path.abspath(d["file_path"]).lstrip("/")
-                in hit_paths
+                d for d in active if keys[d["file_path"]] in hit_paths
             ]
             keep = [d for d in active if d not in touched]
         # when_not_matched_condition (r14): a SQL predicate over the
@@ -4855,7 +4894,7 @@ def _mor_live_scan(spark, table_path: str, meta: dict, operation: str):
     position-delete-writing DML paths. None when the table is empty."""
     from pyspark.sql import functions as F
 
-    from glaredb_spark.sources.files import decoded_file_path
+    from glaredb_spark.sources.files import scan_file_keys
 
     fv = int(meta.get("format-version", 1) or 1)
     if fv != 2:
@@ -4889,26 +4928,24 @@ def _mor_live_scan(spark, table_path: str, meta: dict, operation: str):
             f"position-delete {operation} on a renamed/dropped-column "
             "table is not supported until OPTIMIZE normalizes the files"
         )
-    evolved = (
-        _evolved_read_schema(spark, meta, [p for _s, p in active])
-        if len(meta.get("schemas") or []) > 1
-        else None
+    paths = [p for _s, p in active]
+    out = _scan_parquet(
+        spark, *paths, schema=_read_schema(spark, meta, paths)
     )
-    out = (
-        _scan_parquet(spark, *[p for _s, p in active], schema=evolved)
-        .withColumn("_ice_path", decoded_file_path())
-        .withColumn("_ice_pos", F.col("_metadata.row_index"))
-    )
-    mapping = spark.createDataFrame(
-        [(s, "/" + os.path.abspath(p).lstrip("/")) for s, p in active],
-        "stored string, _ice_path string",
+    keys = scan_file_keys(out, paths, IcebergError)
+    out = out.withColumn(
+        "_ice_path", F.col("_metadata.file_path")
+    ).withColumn("_ice_pos", F.col("_metadata.row_index"))
+    mapping = _file_map(
+        spark, stored=[s for s, _p in active],
+        _ice_path=[keys[p] for _s, p in active],
     )
     if pos_deletes:
         prior = (
-            _scan_parquet(spark, *pos_deletes)
+            spark.read.schema(_POS_DELETE_SCHEMA).parquet(*pos_deletes)
             .select(
                 F.col("file_path").alias("stored"),
-                F.col("pos").cast("long").alias("_ice_pos"),
+                F.col("pos").alias("_ice_pos"),
             )
             .join(F.broadcast(mapping), "stored")
             .select("_ice_path", "_ice_pos")
@@ -5208,7 +5245,6 @@ def changes_iceberg_native(
 
     cur_fields = _current_schema_obj(meta).get("fields", [])
     cur_cols = [f["name"] for f in cur_fields]
-    multi_schema = len(meta.get("schemas") or []) > 1
 
     def _as_current(df):
         cols = []
@@ -5223,24 +5259,19 @@ def changes_iceberg_native(
         return df.select(*cols)
 
     def _scan(paths):
-        evolved = (
-            _evolved_read_schema(spark, meta, paths)
-            if multi_schema else None
-        )
-        return _as_current(_scan_parquet(spark, *paths, schema=evolved))
+        return _as_current(_scan_parquet(
+            spark, *paths, schema=_read_schema(spark, meta, paths)
+        ))
 
     def _visible(data: dict, dels: dict):
         """Rows visible given active data files + delete files (the
         MoR read shape, restricted to the given file subset)."""
         active = [(sp, r, q, pt) for sp, (r, q, pt) in data.items()]
         pos = [r for (r, _q, _pt, c, _e) in dels.values() if c == 1]
-        eq = [(r, e, q, pt) for (r, q, pt, c, e) in dels.values()
+        eq = [(r, e, q, pt, None) for (r, q, pt, c, e) in dels.values()
               if c == 2]
-        evolved = (
-            _evolved_read_schema(
-                spark, meta, [r for _s, r, _q, _pt in active]
-            )
-            if multi_schema else None
+        evolved = _read_schema(
+            spark, meta, [r for _s, r, _q, _pt in active]
         )
         if not pos and not eq:
             return _as_current(_scan_parquet(

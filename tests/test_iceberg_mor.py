@@ -6,6 +6,7 @@ pyarrow) — the same layer external v2 writers produce."""
 
 import json
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -439,3 +440,170 @@ def test_writer_commits_deletes_under_unpartitioned_spec(spark, tmp_path):
         assert spec.get("fields") == []  # unpartitioned delete spec
     # the table's default spec stays partitioned
     assert specs[int(meta.get("default-spec-id", 0))]["fields"]
+
+
+def _upserted_table(spark, path, batches=3):
+    """Writer-created v2 table: keys 0..19 at v0, then ``batches``
+    upserts of five keys each (one equality-delete file per upsert)."""
+    from glaredb_spark.sources.iceberg_native import upsert_iceberg_native
+
+    expect = {k: "v0" for k in range(20)}
+    upsert_iceberg_native(
+        spark, path,
+        spark.createDataFrame(list(expect.items()), "k long, v string"),
+        on=["k"],
+    )
+    for b in range(1, batches + 1):
+        batch = [(k, f"v{b}") for k in range(3 * b, 3 * b + 5)]
+        upsert_iceberg_native(
+            spark, path, spark.createDataFrame(batch, "k long, v string"),
+            on=["k"],
+        )
+        expect.update(batch)
+    return expect
+
+
+def test_mor_table_path_with_uri_chars(spark, tmp_path):
+    """A table whose path holds URI-escapable characters (space, %, #)
+    and a literal '+': Spark reports ``_metadata.file_path``
+    URI-encoded, so every per-file match (position deletes, equality
+    delete sequence scoping, the position-delete DML probe and PURGE)
+    must key on that exact string or deleted rows resurrect — the
+    Iceberg twin of test_dv_partition_values_with_uri_chars."""
+    from glaredb_spark.sources.iceberg_native import (
+        _manifest_entries,
+        delete_iceberg_native,
+        purge_iceberg_native,
+        table_metadata,
+        upsert_iceberg_native,
+        write_iceberg_native,
+    )
+
+    path = str(tmp_path / "t a%25b#c+d" / "tbl")
+    write_iceberg_native(
+        spark.createDataFrame([(k, "v0") for k in range(20)],
+                              "k long, v string"),
+        path, format_version=2,
+    )
+    expect = {k: "v0" for k in range(20)}
+    # position deletes, twice: the second probe must apply the first
+    # delete file's positions through the same per-file key
+    for pred, gone in (("k % 5 = 0", {0, 5, 10, 15}), ("k = 7", {7})):
+        deleted, _ = delete_iceberg_native(spark, path, pred,
+                                           strategy="mor")
+        assert deleted == len(gone)
+        for k in gone:
+            expect.pop(k)
+
+    def _read():
+        return {r["k"]: r["v"]
+                for r in read_iceberg_native(spark, path).collect()}
+
+    assert _read() == expect
+    # equality deletes on top (upsert): re-inserted keys survive by
+    # sequence number, replaced keys die in every older file
+    batch = [(k, "v1") for k in (1, 2, 5, 19)]
+    upsert_iceberg_native(
+        spark, path, spark.createDataFrame(batch, "k long, v string"),
+        on=["k"],
+    )
+    expect.update(batch)
+    assert _read() == expect
+    contents = {
+        e["data_file"].get("content", 0) or 0
+        for e in _manifest_entries(table_metadata(path), path)
+    }
+    assert contents == {0, 1, 2}
+    purged, rows = purge_iceberg_native(spark, path)
+    assert purged >= 1 and rows == len(expect) - len(batch)
+    assert _read() == expect
+    assert all(
+        (e["data_file"].get("content", 0) or 0) == 0
+        for e in _manifest_entries(table_metadata(path), path)
+    )
+
+
+def test_scan_file_keys_refuses_unlisted_file(spark, tmp_path):
+    """A data or delete file the scan does not list has no key; the
+    read must raise rather than let its rows miss every match."""
+    from glaredb_spark.sources.files import scan_file_keys
+
+    a = str(tmp_path / "a b" / "a.parquet")
+    _write_parquet(a, _data(0, 3))
+    df = spark.read.schema("id long, val string").parquet(a)
+    key = scan_file_keys(df, [a], IcebergError)[a]
+    assert key == df.select("_metadata.file_path").first()[0]
+    with pytest.raises(IcebergError, match="lists no such file"):
+        scan_file_keys(df, [str(tmp_path / "other.parquet")], IcebergError)
+
+
+def _initial_plan(df) -> str:
+    # the AQE root before any stage runs: its tree is the initial plan
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_small_delete_side_broadcasts_in_initial_plan(spark, tmp_path):
+    """Manifest record counts size the equality-delete side: a small one
+    is broadcast in the INITIAL plan, so the data rows stream through a
+    broadcast hash anti-join and are never shuffled."""
+    path = str(tmp_path / "small")
+    expect = _upserted_table(spark, path)
+    out = read_iceberg_native(spark, path)
+    plan = _initial_plan(out)
+    assert "isFinalPlan=false" in plan, plan
+    assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert {r["k"]: r["v"] for r in out.collect()} == expect
+
+
+def test_broadcast_disabled_keeps_shuffle_join(spark, tmp_path):
+    """With ``spark.sql.autoBroadcastJoinThreshold=-1`` the delete side
+    is never broadcast statically: the shuffle anti-join stays."""
+    path = str(tmp_path / "nobcast")
+    expect = _upserted_table(spark, path)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = read_iceberg_native(spark, path)
+        plan = _initial_plan(out)
+        assert re.search(r"SortMergeJoin .*LeftAnti", plan), plan
+        assert {r["k"]: r["v"] for r in out.collect()} == expect
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_building_mor_read_starts_no_job(spark, tmp_path):
+    """An all-primitive table scans with its declared schema, so
+    building the MoR read (position and equality deletes) reads no
+    parquet footer and starts no Spark job; running it does."""
+    from glaredb_spark.sources.iceberg_native import delete_iceberg_native
+
+    path = str(tmp_path / "nojob")
+    expect = _upserted_table(spark, path, batches=1)
+    # position deletes need a table without equality deletes: a second
+    # table keeps both kinds in play across the two reads
+    path2 = str(tmp_path / "nojob_pos")
+    from glaredb_spark.sources.iceberg_native import write_iceberg_native
+
+    write_iceberg_native(
+        spark.createDataFrame([(k, "x") for k in range(10)],
+                              "k long, v string"),
+        path2, format_version=2,
+    )
+    delete_iceberg_native(spark, path2, "k < 3", strategy="mor")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("mor_build", "build the MoR reads")
+    try:
+        eq_read = read_iceberg_native(spark, path)
+        pos_read = read_iceberg_native(spark, path2)
+        assert list(tracker.getJobIdsForGroup("mor_build")) == []
+        assert {r["k"]: r["v"] for r in eq_read.collect()} == expect
+        assert sorted(r["k"] for r in pos_read.collect()) == list(
+            range(3, 10))
+        assert list(tracker.getJobIdsForGroup("mor_build"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

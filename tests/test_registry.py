@@ -2,6 +2,8 @@
 
 import inspect
 
+import pytest
+
 
 def test_every_oracle_has_query():
     from glaredb_spark.registry import ORACLES, QUERIES, load_all
@@ -61,3 +63,25 @@ def test_entry_order_matches_registry_order():
     assert list(e.queries()) == ordered_names()
     osql = e.oracle_sql()
     assert [n for n in e.queries() if n in osql] == list(osql)
+
+
+@pytest.mark.parametrize(
+    "name", ["tpcds_diff_q88", "tpcds_diff_q04", "tpcds_diff_q64"]
+)
+def test_tpcds_diff_rows_registered(name):
+    """The TPC-DS differential gate rows register with their oracle when
+    the reference SLT files exist; without them they are left out of
+    the registry and the gate, named with the missing path."""
+    from glaredb_spark.registry import (
+        ORACLES,
+        QUERIES,
+        UNAVAILABLE,
+        load_all,
+        ordered_names,
+    )
+
+    load_all()
+    if name in UNAVAILABLE:
+        assert name not in QUERIES and name not in ordered_names()
+        pytest.skip(UNAVAILABLE[name])
+    assert name in QUERIES and name in ORACLES
